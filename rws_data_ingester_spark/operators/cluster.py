@@ -10,16 +10,18 @@ The reference (rotterdam_swimming_advice.py) has no dedup surface; this
 module is part of the [EXT] LLM-training-data mandate.
 
 Scale design:
-- Min-label propagation, one shuffle per round (symmetric edge join +
-  groupBy id with map-side partial min). Near-dup graphs are shallow —
-  a duplicate cluster is a near-clique because every member collides
-  with the root in some band — so convergence takes 2-4 rounds in
-  practice, independent of corpus size.
-- Per-round state is one label per EDGE-TOUCHING vertex only; isolated
-  vertices (the overwhelming majority of a corpus) are attached as
-  self-components by a single broadcast anti-join at the end. Per-round
-  shuffle volume therefore scales with the candidate set, not the
-  corpus.
+- Two strategies, picked by the size of the candidate edge list (the
+  broadcast-join-threshold analog): a driver-side union-find at or under
+  ``driver_max_edges``, and above it the alternating large-star /
+  small-star rounds of Kiveris et al., "Connected Components in
+  MapReduce and Beyond" (SOCC 2014) — O(log n) rounds regardless of
+  graph diameter, so adversarially deep graphs (long chains) converge
+  too. Both produce the identical min-id labeling (equivalence-tested on
+  random graphs, corpus LSH edges, and a 150-node chain).
+- State is one label per EDGE-TOUCHING vertex only; isolated vertices
+  (the overwhelming majority of a corpus) are attached as
+  self-components by a single anti-join at the end, so per-round
+  shuffle volume scales with the candidate set, not the corpus.
 - CC input is ``lsh_star_edges`` (member → bucket-min), not the clique
   pairs: same components (equivalence-tested), but edge count is linear
   instead of quadratic in bucket size — one hot 10k-member bucket
@@ -28,13 +30,6 @@ Scale design:
   ``spark.sparkContext.setCheckpointDir`` + ``checkpoint`` to durable
   storage); without it the iterative plan grows unboundedly and the
   optimizer re-derives every prior round each action.
-- For adversarially deep graphs (long chains), ``connected_components_star``
-  implements the alternating large-star/small-star rounds of Kiveris et
-  al., "Connected Components in MapReduce and Beyond" (SOCC 2014) —
-  O(log n) rounds regardless of diameter, same output contract
-  (equivalence-tested on random graphs, corpus LSH edges, and a
-  150-node chain where propagation provably cannot finish). Shallow
-  dedup graphs keep the cheaper propagation form.
 - The per-round convergence check is a driver-side ``count`` of changed
   labels — inherent to any iterative fixpoint (GraphX/MLlib do the
   same); it moves one long per round, never data.
@@ -57,7 +52,7 @@ from rws_data_ingester_spark.session import local_frame
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
-    max_iter: int = 20,
+    max_iter: int = 30,
     driver_max_edges: int = 200_000,
 ) -> DataFrame:
     """Connected components of the undirected graph given as an edge list
@@ -65,17 +60,17 @@ def connected_components(
     ``component`` is the minimum node id reachable from ``id``.
 
     **EAGER**: calling this function executes Spark jobs immediately — the
-    edge lineage is materialized once (``localCheckpoint``) and counted to
-    pick a strategy, and the propagation loop's per-round convergence
-    probes are actions. Callers that only want to inspect a plan or schema
+    edge lineage is materialized once (``localCheckpoint``) and probed to
+    pick a strategy, and the star rounds' per-round convergence probes
+    are actions. Callers that only want to inspect a plan or schema
     without paying the (possibly corpus-wide) edge computation should not
     call this until they intend to run it.
 
     ``vertices`` (single-column ``id`` DataFrame) optionally adds
     isolated nodes, which come back as their own component. Raises
-    ``RuntimeError`` if the fixpoint is not reached within ``max_iter``
-    rounds (never observed on shallow dedup graphs; see module docstring
-    for the O(log n) alternative).
+    ``RuntimeError`` if the star rounds do not reach their fixpoint
+    within ``max_iter`` rounds (they need O(log n): a 150-node chain
+    takes 9).
 
     Edges with a NULL endpoint are DROPPED up front (an edge to nothing
     is not an edge): filtering before the strategy gate makes the two
@@ -88,18 +83,20 @@ def connected_components(
 
     Adaptive strategy, the broadcast-join-threshold analog: the edge
     list is checkpointed once (a single execution of the corpus-wide
-    MinHash→LSH lineage) and counted; at or under ``driver_max_edges``
+    MinHash→LSH lineage) and probed; at or under ``driver_max_edges``
     the components are resolved by a driver-side union-find over the
     collected pairs (≈3 MB at the 200k default — the candidate-pair set
     is already the compressed representation of the dedup problem, many
-    orders smaller than the corpus) instead of paying 2-4 rounds of
+    orders smaller than the corpus) instead of paying rounds of
     join+agg+checkpoint jobs whose fixed overhead dwarfs the data at
     that size (measured ~2 s → ~0.3 s on the sf0.1 funnel). Above the
     threshold — the 100 TB regime, where a boilerplate-heavy corpus can
-    emit billions of candidate edges — the distributed min-label
-    propagation below runs unchanged. Both paths produce the identical
-    min-id labeling (equivalence pinned in tests/test_cluster_mixing.py
-    on random graphs, the corpus LSH edges, and null-endpoint edges)."""
+    emit billions of candidate edges — the large-star/small-star rounds
+    run over the same checkpointed edges. Both paths produce the
+    identical min-id labeling (equivalence pinned in
+    tests/test_cluster_mixing.py on random graphs, the corpus LSH edges,
+    and null-endpoint edges); ``driver_max_edges=-1`` forces the star
+    rounds."""
     half = edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     _require_matching_endpoint_types(half)
     half = half.na.drop().localCheckpoint(eager=True)
@@ -112,44 +109,10 @@ def connected_components(
     # gate (+1 row) on any input size.
     probe = half.limit(driver_max_edges + 1).collect()
     if len(probe) <= driver_max_edges:
-        return _with_isolated(_driver_components(half, probe), vertices)
-
-    sym = half.union(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    # Propagate over EDGE-TOUCHING vertices only. Isolated vertices are
-    # their own component by definition and never change, so carrying
-    # them through every round just multiplies per-round shuffle volume:
-    # a near-dup graph touches a few percent of the corpus, and labels
-    # must scale with the CANDIDATE set, not the corpus — they are
-    # attached as self-components once, at the end.
-    endpoints = sym.select(F.col("src").alias("id")).distinct()
-    labels = endpoints.select("id", F.col("id").alias("component"))
-    labels = labels.localCheckpoint(eager=False)
-
-    # Convergence probe: labels only ever DECREASE under min-propagation,
-    # so sum(component) is monotone non-increasing and stationary exactly
-    # at the fixpoint — one cheap scan of the checkpointed labels per
-    # round instead of a join-and-compare shuffle.
-    prev_sum = labels.agg(F.sum("component")).collect()[0][0]
-    if prev_sum is None:  # no edges: every vertex is isolated
-        return _with_isolated(labels, vertices)
-    for _ in range(max_iter):
-        nbr_labels = (
-            sym.join(labels, sym["dst"] == labels["id"])
-            .select(F.col("src").alias("id"), "component")
-        )
-        labels = (
-            nbr_labels.union(labels)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=True)
-        )
-        cur_sum = labels.agg(F.sum("component")).collect()[0][0]
-        if cur_sum == prev_sum:
-            return _with_isolated(labels, vertices)
-        prev_sum = cur_sum
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+        labels = _driver_components(half, probe)
+    else:
+        labels = _star_components(half, max_iter)
+    return _with_isolated(labels, vertices)
 
 
 def union_find_labels(pairs) -> dict:
@@ -157,8 +120,8 @@ def union_find_labels(pairs) -> dict:
     → {id: component} for every edge-touching id. Union-by-min-root
     keeps each tree's root equal to the minimum id of its set, so
     ``find(x)`` IS the min reachable id — the exact labeling the
-    distributed min-label propagation produces (property-tested against
-    a BFS reference in tests/test_cluster_mixing.py)."""
+    distributed star rounds produce (property-tested against a BFS
+    reference in tests/test_cluster_mixing.py)."""
     parent: dict = {}
 
     def find(x):
@@ -187,9 +150,9 @@ def _require_matching_endpoint_types(half: DataFrame) -> None:
     other side could fail createDataFrame verification where the
     distributed union path would silently coerce — the same
     gate-dependent-divergence class as the null-edge fix. A real
-    ``TypeError`` (not ``assert``, which ``python -O`` strips) and a
-    shared call site in ``connected_components`` /
-    ``connected_components_star`` make both paths reject identically."""
+    ``TypeError`` (not ``assert``, which ``python -O`` strips) called
+    once in ``connected_components``, before the gate, makes both paths
+    reject identically."""
     src_type = half.schema[half.columns[0]].dataType
     dst_type = half.schema[half.columns[1]].dataType
     if src_type != dst_type:
@@ -200,7 +163,7 @@ def _require_matching_endpoint_types(half: DataFrame) -> None:
 
 def _driver_components(half: DataFrame, rows: list) -> DataFrame:
     """Union-find over an already-collected (small-by-gate) edge list →
-    the same ``(id, component)`` labeling as the distributed propagation.
+    the same ``(id, component)`` labeling as the star rounds.
     ``half`` supplies only the schema and session; the caller's strategy
     probe already paid the collect.
 
@@ -230,17 +193,18 @@ def _driver_components(half: DataFrame, rows: list) -> DataFrame:
 
 
 def _with_isolated(labels: DataFrame, vertices: DataFrame | None) -> DataFrame:
-    """Union the propagated labels with self-components for vertices that
-    touch no edge (one anti-join at the end instead of dragging the whole
-    corpus through every propagation round).
+    """Union the labels with self-components for vertices that touch no
+    edge (one anti-join at the end instead of dragging the whole corpus
+    through every star round). ``vertices`` is de-duplicated first, so a
+    repeated id still comes back once.
 
-    The anti-join side must be the CHECKPOINTED ``labels`` — whose id set
-    equals the edge-endpoint set by construction — not the pre-checkpoint
-    ``endpoints`` frame: that lineage reaches back through the whole edge
-    pipeline (MinHash → LSH for the dedup queries), so using it here would
-    re-execute the corpus-wide signature computation once per consumption
-    of the result, and a nondeterministic edge input could even disagree
-    with the propagation actually performed."""
+    The anti-join side must be the materialized ``labels`` (collected
+    driver labels or checkpointed star labels), never a frame whose
+    lineage reaches back through the edge pipeline (MinHash → LSH for
+    the dedup queries): that would re-execute the corpus-wide signature
+    computation once per consumption of the result, and a
+    nondeterministic edge input could even disagree with the labeling
+    actually computed."""
     if vertices is None:
         return labels
     isolated = (
@@ -251,6 +215,96 @@ def _with_isolated(labels: DataFrame, vertices: DataFrame | None) -> DataFrame:
     return labels.union(
         isolated.select("id", F.col("id").alias("component"))
     )
+
+
+def _canon(a: F.Column, b: F.Column):
+    return [F.least(a, b).alias("id_a"), F.greatest(a, b).alias("id_b")]
+
+
+def _sym(edges: DataFrame) -> DataFrame:
+    half = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+    return half.union(
+        half.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
+
+
+def _neighborhood_mins(sym: DataFrame) -> DataFrame:
+    """(u, m) where m = min(Γ(u) ∪ {u})."""
+    return (
+        sym.groupBy("u")
+        .agg(F.min("v").alias("_mv"))
+        .select("u", F.least(F.col("u"), F.col("_mv")).alias("m"))
+    )
+
+
+def _star_components(half: DataFrame, max_iter: int) -> DataFrame:
+    """Alternating large-star / small-star rounds (Kiveris et al., SOCC
+    2014) over the checkpointed, null-free ``(src, dst)`` edges → the
+    same ``(id, component)`` labeling as ``_driver_components``.
+    O(log n) rounds on ANY graph shape, so adversarially deep chains
+    (pathological near-dup graphs: doc A ~ B ~ C ~ ... with no shared
+    band between the ends) converge where min-label propagation would
+    need diameter rounds. Per round: two groupBy-min + join passes over
+    the canonical edge list, lineage cut with localCheckpoint.
+
+    large-star(u): every neighbor v > u re-attaches to m = min(Γ⁺(u));
+    small-star(u): every neighbor v < u attaches to m, plus (u, m).
+    The fixpoint is the star from every node to its component minimum.
+    Self-loops carry no connectivity and are dropped from the rounds; a
+    vertex seen only in self-loops is attached as its own component at
+    the end, exactly as the union-find labels it."""
+    cur = (
+        half.select(*_canon(F.col("src"), F.col("dst")))
+        .filter(F.col("id_a") != F.col("id_b"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    prev_labels: DataFrame | None = None
+    for _ in range(max_iter):
+        # large star
+        sym = _sym(cur)
+        mins = _neighborhood_mins(sym)
+        joined = sym.join(mins, "u")
+        large = (
+            joined.filter(F.col("v") > F.col("u"))
+            .select(*_canon(F.col("v"), F.col("m")))
+            .union(mins.select(*_canon(F.col("u"), F.col("m"))))
+            .filter(F.col("id_a") != F.col("id_b"))
+            .distinct()
+        )
+        # small star
+        sym2 = _sym(large)
+        mins2 = _neighborhood_mins(sym2)
+        joined2 = sym2.join(mins2, "u")
+        cur = (
+            joined2.filter(F.col("v") < F.col("u"))
+            .select(*_canon(F.col("v"), F.col("m")))
+            .union(mins2.select(*_canon(F.col("u"), F.col("m"))))
+            .filter(F.col("id_a") != F.col("id_b"))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        labels = _neighborhood_mins(_sym(cur)).select(
+            F.col("u").alias("id"), F.col("m").alias("component")
+        ).localCheckpoint(eager=True)
+        if prev_labels is not None:
+            changed = (
+                labels.alias("a")
+                .join(prev_labels.alias("b"), "id", "full")
+                .filter(
+                    F.col("a.component").isNull()
+                    | F.col("b.component").isNull()
+                    | (F.col("a.component") != F.col("b.component"))
+                )
+                .count()
+            )
+            if changed == 0:
+                break
+        prev_labels = labels
+    else:
+        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+    loops = half.filter(F.col("src") == F.col("dst")).select("src")
+    return _with_isolated(prev_labels, loops)
 
 
 @query("dedup_clusters", oracle=None)  # minhash-dependent candidate set → rows-only
@@ -308,108 +362,3 @@ def pipeline_near_dedup_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-
-
-# --------------------------------------------------------------------------
-# Alternating large-star / small-star connected components
-# (Kiveris et al., "Connected Components in MapReduce and Beyond",
-# SOCC 2014) — O(log n) rounds regardless of graph diameter, vs the
-# diameter-bounded min-label propagation above. Same output contract.
-# --------------------------------------------------------------------------
-def _canon(a: F.Column, b: F.Column):
-    return [F.least(a, b).alias("id_a"), F.greatest(a, b).alias("id_b")]
-
-
-def _sym(edges: DataFrame) -> DataFrame:
-    half = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-    return half.union(
-        half.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-
-
-def _neighborhood_mins(sym: DataFrame) -> DataFrame:
-    """(u, m) where m = min(Γ(u) ∪ {u})."""
-    return (
-        sym.groupBy("u")
-        .agg(F.min("v").alias("_mv"))
-        .select("u", F.least(F.col("u"), F.col("_mv")).alias("m"))
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    vertices: DataFrame | None = None,
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    rounds — O(log n) rounds on ANY graph shape, so adversarially deep
-    chains (pathological near-dup graphs: doc A ~ B ~ C ~ ... with no
-    shared band between the ends) converge where min-label propagation
-    needs diameter rounds. Per round: two groupBy-min + join passes over
-    the canonical edge list, lineage cut with localCheckpoint. Output and
-    contract match ``connected_components`` exactly (equivalence-tested).
-
-    large-star(u): every neighbor v > u re-attaches to m = min(Γ⁺(u));
-    small-star(u): every neighbor v < u attaches to m, plus (u, m).
-    The fixpoint is the star from every node to its component minimum."""
-    _require_matching_endpoint_types(edges.select("id_a", "id_b"))
-    cur = (
-        edges.select(*_canon(F.col("id_a"), F.col("id_b")))
-        .filter(F.col("id_a") != F.col("id_b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    prev_labels: DataFrame | None = None
-    for _ in range(max_iter):
-        # large star
-        sym = _sym(cur)
-        mins = _neighborhood_mins(sym)
-        joined = sym.join(mins, "u")
-        large = (
-            joined.filter(F.col("v") > F.col("u"))
-            .select(*_canon(F.col("v"), F.col("m")))
-            .union(mins.select(*_canon(F.col("u"), F.col("m"))))
-            .filter(F.col("id_a") != F.col("id_b"))
-            .distinct()
-        )
-        # small star
-        sym2 = _sym(large)
-        mins2 = _neighborhood_mins(sym2)
-        joined2 = sym2.join(mins2, "u")
-        cur = (
-            joined2.filter(F.col("v") < F.col("u"))
-            .select(*_canon(F.col("v"), F.col("m")))
-            .union(mins2.select(*_canon(F.col("u"), F.col("m"))))
-            .filter(F.col("id_a") != F.col("id_b"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        labels = _neighborhood_mins(_sym(cur)).select(
-            F.col("u").alias("id"), F.col("m").alias("component")
-        ).localCheckpoint(eager=True)
-        if prev_labels is not None:
-            changed = (
-                labels.alias("a")
-                .join(prev_labels.alias("b"), "id", "full")
-                .filter(
-                    F.col("a.component").isNull()
-                    | F.col("b.component").isNull()
-                    | (F.col("a.component") != F.col("b.component"))
-                )
-                .count()
-            )
-            if changed == 0:
-                break
-        prev_labels = labels
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
-        )
-    out = prev_labels
-    if vertices is not None:
-        out = (
-            vertices.toDF("id")
-            .join(out, "id", "left")
-            .select("id", F.coalesce("component", F.col("id")).alias("component"))
-        )
-    return out

@@ -393,9 +393,9 @@ def lsh_star_edges(
     one exchange on (band_id, band_hash) — rows are 3 longs — then a
     per-bucket window min computes each member's root on the sorted
     partition with no second shuffle. Diameter grows from 1 to 2 per
-    bucket (member→root→member),
-    which costs min-label propagation at most one extra round — rounds are
-    cheap, quadratic edges are not."""
+    bucket (member→root→member), which neither CC strategy pays for
+    (union-find and the O(log n) star rounds are diameter-independent);
+    quadratic edges are the cost that matters."""
     banded = _banded(sigs, id_col, num_hashes, bands).repartition(
         "band_id", "band_hash"
     )

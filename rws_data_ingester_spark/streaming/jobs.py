@@ -17,12 +17,14 @@ operators in ``operators.temporal``.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 from rws_data_ingester_spark.catalog import normalize_event_ts
 from rws_data_ingester_spark.functions.rounding import pround
@@ -122,7 +124,8 @@ def events_stream(
     return normalize_event_ts(raw)
 
 
-def _pin_stream_shuffle_partitions(spark: SparkSession) -> "contextlib.AbstractContextManager":
+@contextlib.contextmanager
+def _pin_stream_shuffle_partitions(spark: SparkSession):
     """Stateful-streaming shuffles allocate one state store per shuffle
     partition, the count is frozen into the checkpoint at query start, and
     AQE never coalesces stateful stages — so a session left at the vanilla
@@ -131,19 +134,21 @@ def _pin_stream_shuffle_partitions(spark: SparkSession) -> "contextlib.AbstractC
     the caller's value afterwards (the conf is only read at query start).
     On a real cluster the deployment would size this once per job to
     ~total-cores; here it protects against foreign sessions (the driver's)."""
-    import contextlib
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    parts = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8)
+    spark.conf.set("spark.sql.shuffle.partitions", parts)
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    @contextlib.contextmanager
-    def _pinned():
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        parts = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8)
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    return _pinned()
+def _run_available_now(writer: DataStreamWriter, spark: SparkSession) -> None:
+    """Start the configured ``writer`` with the availableNow trigger (the
+    reference's full-refresh semantics) under pinned shuffle partitions
+    and block until the source is drained."""
+    with _pin_stream_shuffle_partitions(spark):
+        writer.trigger(availableNow=True).start().awaitTermination()
 
 
 def run_to_memory(stream_df: DataFrame, output_mode: str = "complete") -> DataFrame:
@@ -152,15 +157,10 @@ def run_to_memory(stream_df: DataFrame, output_mode: str = "complete") -> DataFr
     final table as a batch DataFrame."""
     name = f"mem_{uuid.uuid4().hex[:8]}"
     spark = stream_df.sparkSession
-    with _pin_stream_shuffle_partitions(spark):
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_available_now(
+        stream_df.writeStream.outputMode(output_mode).format("memory").queryName(name),
+        spark,
+    )
     return spark.sql(f"SELECT * FROM {name}")
 
 
@@ -294,14 +294,9 @@ def scheduled_refresh(
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(out_path)
 
-    with _pin_stream_shuffle_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .foreachBatch(write_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_available_now(
+        agg.writeStream.outputMode("complete").foreachBatch(write_batch), spark
+    )
 
 
 def stateful_running_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -417,16 +412,13 @@ def run_to_parquet(stream_df: DataFrame, out_dir: str, checkpoint_dir: str) -> N
     sink's commit log, so a restarted query resumes from the last
     committed batch and never re-writes rows — the exactly-once story a
     100 TB ingest pipeline relies on."""
-    with _pin_stream_shuffle_partitions(stream_df.sparkSession):
-        q = (
-            stream_df.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_available_now(
+        stream_df.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir),
+        stream_df.sparkSession,
+    )
 
 
 def parquet_sink_two_phase_replay(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,7 +22,7 @@ def _components_of(spark, edges, vertices=None):
 
 
 def test_cc_chain_multi_hop(spark):
-    # Path 1-2-3-4-5-6: needs >1 propagation round to reach the far end.
+    # Path 1-2-3-4-5-6: the far end is five hops from the component root.
     comp = _components_of(spark, [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)])
     assert comp == {i: 1 for i in range(1, 7)}
 
@@ -56,11 +56,11 @@ def test_cc_result_does_not_reexecute_edge_pipeline(spark):
         [(1, 2), (2, 3), (10, 11)], ["id_a", "id_b"]
     ).where(probe_udf("id_a"))
     vdf = spark.createDataFrame([(v,) for v in [1, 2, 3, 10, 11, 99]], ["id"])
-    # driver_max_edges=-1 forces the DISTRIBUTED propagation: that is the
-    # path whose isolated-vertex anti-join historically re-executed the
-    # edge lineage (the round-4 bug this test pins); the round-5 driver
-    # fast path cannot re-execute by construction (labels are a collected
-    # local relation), so letting it run here would blind the pin.
+    # driver_max_edges=-1 forces the DISTRIBUTED star rounds: that is the
+    # path whose isolated-vertex anti-join could re-execute the edge
+    # lineage (the round-4 bug this test pins); the driver fast path
+    # cannot re-execute by construction (labels are a collected local
+    # relation), so letting it run here would blind the pin.
     out = connected_components(edf, vertices=vdf, driver_max_edges=-1)
     built = acc.value  # edge evaluations spent building/converging
     assert built > 0
@@ -223,12 +223,9 @@ def _cc_sets(rows):
 
 
 def test_star_cc_equals_propagation_on_random_graphs(spark):
+    """Driver union-find and distributed star rounds (forced by
+    driver_max_edges=-1) find the same clusters on random graphs."""
     import random
-
-    from rws_data_ingester_spark.operators.cluster import (
-        connected_components,
-        connected_components_star,
-    )
 
     for seed in (7, 42, 99):
         rng = random.Random(seed)
@@ -241,53 +238,45 @@ def test_star_cc_equals_propagation_on_random_graphs(spark):
         )
         verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
         a = _cc_sets(connected_components(edf, vertices=verts).collect())
-        b = _cc_sets(connected_components_star(edf, vertices=verts).collect())
+        b = _cc_sets(
+            connected_components(edf, vertices=verts, driver_max_edges=-1).collect()
+        )
         assert a == b, f"seed {seed}"
 
 
 def test_star_cc_beats_propagation_on_deep_chain(spark):
-    """A 150-node chain has diameter 149: min-label propagation cannot
-    finish in 8 rounds; the star alternation needs ~log2(150)+1 ≈ 9
-    (8 halvings + the stability-detection round) — the O(log n) claim,
-    demonstrated rather than asserted."""
-    import pytest as _pytest
-
-    from rws_data_ingester_spark.operators.cluster import (
-        connected_components,
-        connected_components_star,
-    )
-
+    """A 150-node chain has diameter 149, yet the star alternation
+    converges within 10 rounds: ~log2(150)+1 ≈ 9 (8 halvings + the
+    stability-detection round) — the O(log n) claim, demonstrated rather
+    than asserted. driver_max_edges=-1 forces the star rounds: the driver
+    union-find would otherwise resolve this tiny chain directly."""
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(149)], "id_a long, id_b long"
     )
-    # driver_max_edges=-1 forces the distributed propagation: the gated
-    # driver union-find (round 5) would otherwise resolve this tiny
-    # chain directly and converge trivially.
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=8, driver_max_edges=-1)
-    out = connected_components_star(chain, max_iter=10).collect()
+    out = connected_components(chain, max_iter=10, driver_max_edges=-1).collect()
     assert len(out) == 150
     assert {r["component"] for r in out} == {0}
 
 
 def test_star_cc_isolated_vertices(spark):
-    from rws_data_ingester_spark.operators.cluster import connected_components_star
-
+    """Isolated vertices come back as their own component on both the
+    driver and the star path."""
     edf = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
     verts = spark.createDataFrame([(i,) for i in range(5)], "id long")
-    out = {r["id"]: r["component"] for r in connected_components_star(edf, vertices=verts).collect()}
-    assert out == {0: 0, 1: 1, 2: 1, 3: 3, 4: 4}
+    for gate in (200_000, -1):
+        out = {
+            r["id"]: r["component"]
+            for r in connected_components(
+                edf, vertices=verts, driver_max_edges=gate
+            ).collect()
+        }
+        assert out == {0: 0, 1: 1, 2: 1, 3: 3, 4: 4}, gate
 
 
 def test_star_cc_equals_propagation_on_corpus_lsh_edges(spark):
-    """Both CC algorithms must produce identical clusters on the REAL
+    """Both CC strategies must produce identical clusters on the REAL
     near-dup graph (MinHash/LSH star edges of the fixture corpus)."""
-    from tests.conftest import SF_DIR
     from rws_data_ingester_spark.catalog import Catalog
-    from rws_data_ingester_spark.operators.cluster import (
-        connected_components,
-        connected_components_star,
-    )
     from rws_data_ingester_spark.operators.dedup import (
         lsh_star_edges,
         minhash_signature,
@@ -298,15 +287,17 @@ def test_star_cc_equals_propagation_on_corpus_lsh_edges(spark):
     edges = lsh_star_edges(sigs, "doc_id")
     verts = d.select("doc_id")
     a = _cc_sets(connected_components(edges, vertices=verts).collect())
-    b = _cc_sets(connected_components_star(edges, vertices=verts).collect())
+    b = _cc_sets(
+        connected_components(edges, vertices=verts, driver_max_edges=-1).collect()
+    )
     assert a == b
 
 
 def test_cc_driver_path_equals_distributed_path(spark):
     """The size-gated driver union-find (edges <= driver_max_edges, the
     broadcast-threshold analog added in round 5) must produce the
-    identical (id, component) labeling as the distributed min-label
-    propagation — pinned on random graphs, a duplicate-edge/self-dup mix,
+    identical (id, component) labeling as the distributed star rounds —
+    pinned on random graphs, a duplicate-edge/self-dup mix,
     and a chain. driver_max_edges=-1 forces the distributed path on the
     same input."""
     import random
@@ -340,7 +331,7 @@ def test_cc_driver_path_equals_distributed_path(spark):
 def test_cc_null_endpoint_edges_dropped_identically_on_both_paths(spark):
     """NULL-endpoint edges are dropped up front (round-6 fix: previously
     the driver union-find crashed on the null compare while the
-    distributed propagation half-kept the edge, so the labeling depended
+    distributed path half-kept the edge, so the labeling depended
     on the size gate). Both paths must agree: the null edges contribute
     nothing, and a node seen only in null edges is isolated."""
     rows = [(1, 2), (2, None), (None, 3), (None, None), (4, 5)]
@@ -363,13 +354,9 @@ def test_cc_mixed_endpoint_types_rejected_identically_on_both_paths(spark):
     ``assert`` (stripped under ``python -O``) inside the driver path
     only, so a mixed-type edge list raised on one side of the gate and
     silently coerced on the other — the same gate-dependent-divergence
-    class as the null-edge fix. Both gate settings and the star variant
-    must reject with the same error type."""
+    class as the null-edge fix. Both gate settings must reject with the
+    same error type."""
     import pytest
-
-    from rws_data_ingester_spark.operators.cluster import (
-        connected_components_star,
-    )
 
     edf = spark.createDataFrame(
         [(1, "2"), (2, "3")], "id_a long, id_b string"
@@ -377,8 +364,6 @@ def test_cc_mixed_endpoint_types_rejected_identically_on_both_paths(spark):
     for gate in (200_000, -1):
         with pytest.raises(TypeError, match="endpoint types must match"):
             connected_components(edf, driver_max_edges=gate)
-    with pytest.raises(TypeError, match="endpoint types must match"):
-        connected_components_star(edf)
 
 
 def test_cc_empty_edges_both_paths(spark):
@@ -394,6 +379,20 @@ def test_cc_empty_edges_both_paths(spark):
             ).collect()
         }
         assert comp == {3: 3, 5: 5, 9: 9}
+
+
+def test_cc_self_loop_only_vertex_labelled_on_both_paths(spark):
+    """A vertex whose only edge is a self-loop is edge-touching: the
+    union-find labels it as its own component even without ``vertices``.
+    The star rounds drop self-loops, so they must attach such a vertex
+    at the end to give the same labeling."""
+    edf = spark.createDataFrame([(1, 2), (2, 2), (7, 7)], "id_a long, id_b long")
+    for gate in (200_000, -1):
+        comp = {
+            r["id"]: r["component"]
+            for r in connected_components(edf, driver_max_edges=gate).collect()
+        }
+        assert comp == {1: 1, 2: 1, 7: 7}, (gate, comp)
 
 
 def test_driver_union_find_matches_bfs_reference():

@@ -71,12 +71,32 @@ def test_load_table_serves_cached_handle_per_session(spark):
     a = load_table(spark, SF_DIR, "nation")
     b = load_table(spark, SF_DIR, "nation")
     assert a is b, "same session + same path must serve the cached handle"
-    # the cache is keyed on the live session object and holds plan
-    # handles only — clearing it must be invisible to results
-    cat._DF_CACHE.clear()
+    # the cache lives on the session object and holds plan handles
+    # only — clearing it must be invisible to results
+    getattr(spark, cat._HANDLES_ATTR).clear()
     c = load_table(spark, SF_DIR, "nation")
     assert c is not a
     cols = a.columns
     assert rows_to_multiset(cols, [tuple(r) for r in a.collect()]) == rows_to_multiset(
         cols, [tuple(r) for r in c.collect()]
     )
+
+
+def test_load_table_cache_does_not_outlive_its_session(spark):
+    """A session that loaded a table must be garbage once its caller drops
+    it: the handle cache may not keep it (or its plans) alive. A
+    module-level map keyed weakly by session failed this, because each
+    cached DataFrame holds a strong reference back to its session."""
+    import gc
+    import weakref
+
+    from pyspark import RDD
+
+    toDF = RDD.toDF  # every new session rebinds RDD.toDF to itself
+    other = spark.newSession()
+    load_table(other, SF_DIR, "nation")
+    gone = weakref.ref(other)
+    del other
+    RDD.toDF = toDF
+    gc.collect()
+    assert gone() is None, "load_table kept a dropped session alive"
